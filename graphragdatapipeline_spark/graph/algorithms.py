@@ -1,9 +1,17 @@
 """Graph algorithms as iterative DataFrame programs (SURVEY §2.9).
 
 Design for scale: every iteration is a shuffled join on the edge
-table; lineage is cut with localCheckpoint() every iteration so a
-30-round fixpoint doesn't build a 30-deep plan (SURVEY §4 note 3).
-Convergence checks are cheap aggregates, not collects of the frame.
+table, and every loop runs through one driver, ``_iterate``, in the
+spirit of GraphX's Pregel operator and Pregelix's materialized
+supersteps. Each round's state is a lazy localCheckpoint, so a
+30-round fixpoint never builds a 30-deep plan (SURVEY §4 note 3). A
+loop with a convergence test materializes every round with the one
+cheap count that also decides convergence (never a collect of the
+frame); a fixed-round loop materializes once per window of
+``_FUSE_ROUNDS`` rounds and at its last round, so short loops run
+their rounds as one job. A superseded round is freed as soon as a
+later one is materialized, and the loop's invariant operands when it
+returns: a loop leaves one persisted RDD, the one behind its result.
 
 The community-detection contract replaces the reference's driver-local
 Leiden (utils/neo4j_helpers.py:237-268, single-threaded C core over
@@ -15,8 +23,12 @@ but it scales to edge lists that never fit one machine.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+from pyspark.storagelevel import StorageLevel
 
 
 def _free_checkpoint(df: DataFrame) -> None:
@@ -36,6 +48,75 @@ def _free_checkpoint(df: DataFrame) -> None:
             sc._jsc.sc().unpersistRDD(plan.rdd().id(), False)
     except Exception:  # pragma: no cover — py4j internals shifted
         pass
+
+
+# Rounds of a loop without a convergence test that run between two
+# materializations: bounds the checkpoints alive at once to about
+# (_FUSE_ROUNDS + 1) × |state|.
+_FUSE_ROUNDS = 4
+
+
+def _iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    max_rounds: int | None,
+    until: Callable[[DataFrame], bool] | None = None,
+    operands: Sequence[DataFrame] = (),
+) -> tuple[DataFrame, bool]:
+    """The one iteration driver: ``state = step(state, r)`` for rounds
+    r = 0, 1, … until ``until(state)`` holds or ``max_rounds`` rounds
+    ran (None: no bound) → (state, converged).
+
+    The initial state and every round are lazy localCheckpoints. With
+    ``until``, its call on each state is the one action that both
+    materializes the state and decides convergence, so it must read
+    the whole state (a count or an aggregate); on the initial state it
+    may return False without an action, and the first round then
+    materializes that state. Without ``until``, the last round of each
+    ``_FUSE_ROUNDS`` window and the last round overall checkpoint
+    eagerly, so a window runs as one job. Superseded states are freed
+    once a later state is materialized (never before: a lazy checkpoint
+    whose source is gone cannot be computed), and ``operands`` — the
+    loop-invariant checkpoints the steps read, looked up when the loop
+    returns so a step may append to them — on return."""
+    state = state.localCheckpoint(eager=until is None and max_rounds == 0)
+    converged = until is not None and until(state)
+    superseded: list[DataFrame] = []
+    r = 0
+    while not converged and (max_rounds is None or r < max_rounds):
+        r += 1
+        eager = until is None and (r % _FUSE_ROUNDS == 0 or r == max_rounds)
+        superseded.append(state)
+        state = step(state, r - 1).localCheckpoint(eager=eager)
+        if until is not None:
+            converged = until(state)
+        if until is not None or eager:
+            for old in superseded:
+                _free_checkpoint(old)
+            superseded.clear()
+    for df in operands:
+        _free_checkpoint(df)
+    return state, converged
+
+
+def _rows(df: DataFrame) -> int:
+    """Row count of a checkpoint, or of a filter over one, in ONE job:
+    counts the plan's RDD directly, where ``DataFrame.count()`` adds an
+    aggregate exchange that AQE runs as a second job. Every partition
+    is computed, so the count also materializes the checkpoint."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
+def _same_count(counts: list[int]) -> Callable[[DataFrame], bool]:
+    """``until`` for a state that only grows or only shrinks: converged
+    once a round leaves its row count unchanged. Appends each count to
+    ``counts``."""
+
+    def until(state: DataFrame) -> bool:
+        counts.append(_rows(state))
+        return len(counts) > 1 and counts[-1] == counts[-2]
+
+    return until
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -85,9 +166,7 @@ def two_hop(
     return a.join(b, "b").select("a", "b", "c")
 
 
-def transitive_closure(
-    edges: DataFrame, max_iter: int = 25, checkpoint_every: int = 1
-) -> DataFrame:
+def transitive_closure(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """G11 — full transitive closure (node, ancestor) over a DAG by
     iterated doubling (reference: SPARQL `wdt:P279*` subclass-of
     closure at build_artist_index.py:54-57).
@@ -95,43 +174,19 @@ def transitive_closure(
     Doubling halves the number of shuffle rounds vs naive BFS:
     closure_{2k} = closure_k ⋈ closure_k, so depth-d hierarchies finish
     in ceil(log2 d) joins — at 100 TB the join count, not the row
-    count, is the latency driver."""
-    closure = edges.select(F.col("src").alias("node"), F.col("dst").alias("anc")).distinct()
-    closure = closure.localCheckpoint(eager=True)
-    old_count = closure.count()
-    # The frame to free must be the last CHECKPOINTED one, not the loop
-    # variable: with checkpoint_every > 1 `closure` is a lazy
-    # union/distinct over the previous checkpoint on off rounds, so
-    # _free_checkpoint(closure) would be a silent no-op (not a
-    # LogicalRDD) and the superseded checkpoint would leak until GC.
-    prev_ckpt = closure
-    for i in range(max_iter):
+    count, is the latency driver. The closure only grows, so a round
+    that leaves its row count unchanged is the fixpoint."""
+
+    def double(closure: DataFrame, _: int) -> DataFrame:
         hop = (
             closure.alias("l")
             .join(closure.alias("r"), F.col("l.anc") == F.col("r.node"))
             .select(F.col("l.node").alias("node"), F.col("r.anc").alias("anc"))
         )
-        new_closure = closure.unionByName(hop).distinct()
-        checkpointed = (i + 1) % checkpoint_every == 0
-        if checkpointed:
-            # Lazy: the count below is the materializing action — one
-            # job per round instead of checkpoint-then-recount. The
-            # previous round's count is carried, not recomputed (the
-            # closure table is append-monotone, so the fixpoint test
-            # only needs this round's size against last round's).
-            new_closure = new_closure.localCheckpoint(eager=False)
-        new_count = new_closure.count()
-        if checkpointed:
-            # The closure table GROWS every round; superseded rounds'
-            # checkpoint blocks must be released, not left for GC
-            # (see _free_checkpoint — the components-loop lesson).
-            _free_checkpoint(prev_ckpt)
-            prev_ckpt = new_closure
-        closure = new_closure
-        if new_count == old_count:
-            break
-        old_count = new_count
-    return closure
+        return closure.unionByName(hop).distinct()
+
+    closure = edges.select(F.col("src").alias("node"), F.col("dst").alias("anc")).distinct()
+    return _iterate(closure, double, max_iter, until=_same_count([]))[0]
 
 
 def connected_components(
@@ -150,7 +205,7 @@ def connected_components(
     Hash-Min needs O(diameter) rounds — a 50-vertex chain (the shape
     entity-resolution size-bands produce) takes 50 shuffles; with the
     pointer jump the min label doubles its reach per round, giving
-    O(log diameter). localCheckpoint every round keeps plans flat.
+    O(log diameter).
     Raises if max_iter rounds exhaust before the fixpoint — a silently
     unconverged label is a wrong answer, not a slow one."""
     sym = edges.select("src", "dst").unionByName(
@@ -158,15 +213,12 @@ def connected_components(
     )
     # Checkpoint memory discipline (learned at the 100× fixture, where
     # the symmetrized ER pair graph is ~2×10⁸ rows): every superseded
-    # loop checkpoint is UNPERSISTED as soon as its successor is
-    # materialized — otherwise the pre-repartition edge copy plus one
-    # label table per round accumulate in the unified pool and the
-    # executor heap dies mid-loop. The edge table (the big, loop-
-    # invariant operand) additionally pins MEMORY_AND_DISK explicitly:
-    # blocks the pool can't hold overflow to local disk instead of
-    # competing with the per-round join's execution memory.
-    from pyspark.storagelevel import StorageLevel
-
+    # label table is freed as soon as its successor is materialized —
+    # otherwise one label table per round accumulates in the unified
+    # pool and the executor heap dies mid-loop. The edge copies (the
+    # big, loop-invariant operands, freed on return) pin MEMORY_AND_DISK
+    # explicitly: blocks the pool can't hold overflow to local disk
+    # instead of competing with the per-round join's execution memory.
     sym0 = (
         sym.filter(F.col("src") != F.col("dst"))
         .distinct()
@@ -181,21 +233,14 @@ def connected_components(
     # graph (dedup/ER pair sets are orders of magnitude below the
     # corpus) default shuffle width is pure fixed-cost latency. AQE
     # can't help — each round is a separate checkpointed job.
-    n_edges = sym0.count()
+    n_edges = _rows(sym0)
     default_parts = sym0.sparkSession.conf.get("spark.sql.shuffle.partitions")
     parts = max(2, min(int(default_parts), n_edges // 100_000 + 1))
     sym = sym0.repartition(parts, "dst").localCheckpoint(
         eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
     )
-    _free_checkpoint(sym0)
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    prev_ckpt = labels  # the round's checkpointed frame, freed next round
-    for _ in range(max_iter):
+
+    def hash_min_jump(labels: DataFrame, _: int) -> DataFrame:
         nbr_min = (
             sym.join(labels, sym.dst == labels.id)
             .groupBy(F.col("src").alias("id"))
@@ -216,37 +261,30 @@ def connected_components(
         parent = hashmin.select(
             F.col("id").alias("component"), F.col("component").alias("_parent")
         )
-        updated = (
-            hashmin.join(parent, "component", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce("_parent", F.col("component"))
-                ).alias("component"),
-                (
-                    F.least(
-                        F.col("component"),
-                        F.coalesce("_parent", F.col("component")),
-                    )
-                    < F.col("_prev")
-                ).cast("int").alias("_changed"),
-            )
-            # Lazy: the changed-count action right below is the
-            # materializing pass, so each round runs ONE job instead of
-            # an eager-checkpoint job followed by a re-scan for the sum
-            # (fixed-cost-per-round discipline; values untouched —
-            # the same rows are written either way).
-        ).localCheckpoint(eager=False)
-        changed = updated.agg(F.sum("_changed")).first()[0] or 0
-        _free_checkpoint(prev_ckpt)  # superseded round — release its blocks
-        prev_ckpt = updated
-        labels = updated.drop("_changed")
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds; "
-        "with pointer jumping this needs O(log diameter) — raise max_iter"
+        jumped = F.least(F.col("component"), F.coalesce("_parent", F.col("component")))
+        return hashmin.join(parent, "component", "left").select(
+            "id",
+            jumped.alias("component"),
+            (jumped < F.col("_prev")).cast("int").alias("_changed"),
+        )
+
+    def settled(labels: DataFrame) -> bool:
+        # the initial labels have no _changed column and nothing to
+        # test; the first round materializes them
+        if "_changed" not in labels.columns:
+            return False
+        return _rows(labels.filter(F.col("_changed") == 1)) == 0
+
+    labels = sym.select(F.col("src").alias("id")).distinct().withColumn("component", F.col("id"))
+    labels, converged = _iterate(
+        labels, hash_min_jump, max_iter, settled, operands=[sym0, sym]
     )
+    if not converged:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds; "
+            "with pointer jumping this needs O(log diameter) — raise max_iter"
+        )
+    return labels.drop("_changed")
 
 
 def label_propagation(
@@ -307,19 +345,12 @@ def label_propagation(
     # be orders of magnitude below defaultParallelism, where full-width
     # rounds are pure fixed-cost latency, and AQE cannot re-plan across
     # checkpointed iterations.
-    # Lazy: the sizing count below materializes the checkpoint — one
-    # job instead of checkpoint-then-recount.
+    # Lazy: the sizing count below materializes the checkpoint.
     sym0 = sym.localCheckpoint(eager=False)
-    par = max(2, min(par, sym0.count() // 100_000 + 1))
-    # Lazy edge/init/round checkpoints (r14): LPA has a FIXED round
-    # count — no per-round convergence scalar forces a driver sync —
-    # so the LAST round's single eager checkpoint materializes the
-    # repartitioned edges, the init labels, and every round in ONE job
-    # (the louvain_move fusion; each lazy checkpoint still truncates
-    # the logical plan and its blocks persist as computed). sym0 and
-    # superseded rounds are freed only after that job — freeing a lazy
-    # checkpoint's source or blocks pre-materialization would make it
-    # unrecomputable.
+    par = max(2, min(par, _rows(sym0) // 100_000 + 1))
+    # The repartitioned edges and the init labels are lazy too: LPA has
+    # a FIXED round count, so the driver's first window job
+    # materializes them together with the rounds.
     sym = sym0.repartition(par, "dst").localCheckpoint(eager=False)
     ids = sym.select(F.col("src").alias("id")).distinct()
     if vertices is not None:
@@ -338,11 +369,8 @@ def label_propagation(
         16,
         10,
     ).cast("long")
-    labels = ids.withColumn("community", init).repartition(par, "id").localCheckpoint(
-        eager=(max_iter == 0)
-    )
-    superseded: list[DataFrame] = []
-    for r in range(max_iter):
+
+    def propagate(labels: DataFrame, _: int) -> DataFrame:
         votes = (
             sym.join(labels, sym.dst == labels.id)
             .groupBy(F.col("src").alias("id"), F.col("community"))
@@ -358,23 +386,16 @@ def label_propagation(
                 "community", F.struct(F.col("votes"), F.bitwise_not(F.col("community")))
             ).alias("new_community")
         )
-        new_labels = (
+        return (
             labels.join(winner, "id", "left")
             .select(
                 "id", F.coalesce("new_community", F.col("community")).alias("community")
             )
             .coalesce(par)
-            .localCheckpoint(eager=(r == max_iter - 1))
         )
-        superseded.append(labels)
-        labels = new_labels
-    # superseded rounds are vertex-sized, but at 100 TB vertex tables
-    # are billions of rows — same accumulate-until-OOM hazard the
-    # components loop measured; safe to free only now (materialized)
-    for old in superseded:
-        _free_checkpoint(old)
-    _free_checkpoint(sym0)
-    return labels
+
+    labels = ids.withColumn("community", init).repartition(par, "id")
+    return _iterate(labels, propagate, max_iter, operands=[sym0, sym])[0]
 
 
 def _contract(edges: DataFrame, assignment: DataFrame) -> DataFrame:
@@ -590,28 +611,27 @@ def louvain_move(
     # Same edge-count-sized round width as detect_communities /
     # connected_components — the ladder's contracted levels are tiny,
     # and move rounds there were dominated by fixed per-round costs.
-    # Lazy: the sizing count below materializes the checkpoint — one
-    # job instead of checkpoint-then-recount. When the caller already
-    # knows the edge count (the multilevel loop counts each contracted
-    # graph as it persists it), 2·n_edges_hint upper-bounds the
-    # symmetrized row count and the sizing pass is skipped entirely —
-    # par is a layout knob, every per-round aggregate is
-    # order-independent, and at any count below the 100k round-width
-    # step both paths yield the identical par anyway.
-    # The repartitioned edge checkpoint is LAZY in both paths (r14):
-    # its first consumer is the `nodes` lineage feeding the 2m
-    # aggregate below, so that single job materializes sym AND nodes
-    # together — one job instead of eager-checkpoint-then-aggregate
-    # (guide §1.2; the rounds then read the cached blocks). Values
-    # untouched: the same rows land in the same layout either way.
-    sym0 = None
+    # When the caller already knows the edge count (the multilevel loop
+    # counts each contracted graph as it persists it), 2·n_edges_hint
+    # upper-bounds the symmetrized row count and the sizing pass is
+    # skipped entirely — par is a layout knob, every per-round
+    # aggregate is order-independent, and at any count below the 100k
+    # round-width step both paths yield the identical par anyway.
+    # The repartitioned edge checkpoint is LAZY in both paths: its
+    # first consumer is the `nodes` lineage feeding the 2m aggregate
+    # below, so that single job materializes sym AND nodes together —
+    # one job instead of eager-checkpoint-then-aggregate (guide §1.2;
+    # the rounds then read the cached blocks). Values untouched: the
+    # same rows land in the same layout either way.
+    edge_copies = []
     if n_edges_hint is not None:
         par = max(2, min(par, 2 * n_edges_hint // 100_000 + 1))
-        sym = sym.repartition(par, "dst").localCheckpoint(eager=False)
     else:
-        sym0 = sym.localCheckpoint(eager=False)
-        par = max(2, min(par, sym0.count() // 100_000 + 1))
-        sym = sym0.repartition(par, "dst").localCheckpoint(eager=False)
+        sym = sym.localCheckpoint(eager=False)  # materialized by the count
+        par = max(2, min(par, _rows(sym) // 100_000 + 1))
+        edge_copies.append(sym)
+    sym = sym.repartition(par, "dst").localCheckpoint(eager=False)
+    edge_copies.append(sym)
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.sum("_w").alias("_k"))
     ids = sym.select(F.col("src").alias("id")).distinct()
     if vertices is not None:
@@ -630,31 +650,18 @@ def louvain_move(
     # one job instead of checkpoint-then-rescan (values untouched).
     nodes = nodes.repartition(par, "id").localCheckpoint(eager=False)
     two_m = nodes.agg(F.sum("_k")).first()[0] or 1.0  # scalar graph stat
-    if sym0 is not None:
-        # safe to drop only now: sym (lazy) materialized inside the 2m
-        # job above, and freeing a lazy checkpoint's SOURCE before the
-        # dependent checkpoint exists would make it unrecomputable
-        _free_checkpoint(sym0)
 
-    memb = nodes.select("id", F.col("id").alias("community"))
     # Renamed copy for strength lookups inside comm_K: `nodes` also
     # joins directly into the scoring plan below, and reusing the same
     # `_k` attribute in both subtrees makes the reference ambiguous
     # after Spark's self-join de-duplication.
     strength = nodes.select("id", F.col("_k").alias("_ck"))
-    # Per-round checkpoints are LAZY except the last (r14, guide §1.2):
-    # Louvain's move rounds have a FIXED count — unlike the CC/closure/
-    # pagerank loops there is no per-round convergence scalar forcing a
-    # driver sync — so the whole rounds chain can materialize in the
-    # final round's single eager checkpoint job (each lazy checkpoint
-    # still truncates the logical plan, so per-round plan size stays
-    # flat; the blocks of every round persist as they are computed,
-    # exactly as under eager). One job per move call instead of one per
-    # round. Superseded rounds are freed only AFTER that job: freeing a
-    # lazy checkpoint's blocks before it materializes would make it
-    # unrecomputable.
-    superseded: list[DataFrame] = []
-    for r in range(rounds):
+
+    # Move rounds have a FIXED count — no per-round convergence scalar
+    # forces a driver sync — so the driver runs each window of rounds
+    # as one job (each lazy checkpoint still truncates the logical
+    # plan, so per-round plan size stays flat).
+    def move(memb: DataFrame, r: int) -> DataFrame:
         comm_K = (
             memb.join(strength, "id")
             .groupBy("community")
@@ -736,28 +743,25 @@ def louvain_move(
         )
         # parity gate: only one hash-class moves per round
         gate = (F.abs(F.hash(F.col("id"))) % 2) == F.lit(r % 2)
-        new_memb = (
-            moved.select(
-                "id",
-                F.when(
-                    gate & (F.col("_b._score") > F.col("_stay") + F.lit(1e-12)),
-                    F.col("_b._c"),
-                )
-                .otherwise(F.col("_a"))
-                .alias("community"),
+        new_memb = moved.select(
+            "id",
+            F.when(
+                gate & (F.col("_b._score") > F.col("_stay") + F.lit(1e-12)),
+                F.col("_b._c"),
             )
-            # id layout already established by the pre-agg repartition
-            .localCheckpoint(eager=(r == rounds - 1))
+            .otherwise(F.col("_a"))
+            .alias("community"),
         )
-        superseded.append(memb)
-        memb = new_memb
-    for old in superseded:  # superseded rounds' membership blocks
-        _free_checkpoint(old)
-    # canonical labels: the minimum member vertex id
-    canon = memb.groupBy("community").agg(F.min("id").alias("_label"))
-    return memb.join(canon, "community").select(
-        "id", F.col("_label").alias("community")
-    )
+        if r < rounds - 1:
+            # id layout already established by the pre-agg repartition
+            return new_memb
+        # last round: canonical labels, the minimum member vertex id
+        return new_memb.select(
+            "id", F.min("id").over(Window.partitionBy("community")).alias("community")
+        )
+
+    memb = nodes.select("id", F.col("id").alias("community"))
+    return _iterate(memb, move, rounds, operands=[*edge_copies, nodes])[0]
 
 
 def _contract_weighted(
@@ -818,60 +822,50 @@ def louvain_multilevel(
     ~87k ≈ 0.76× exact Leiden at rounds=8/20 cycles — the damped
     synchronous argmax trades the last fraction of sequential-Leiden
     quality for never collecting the graph (full table and the
-    three-rung quality ladder in SCALE.md)."""
-    from concurrent.futures import ThreadPoolExecutor
+    three-rung quality ladder in SCALE.md).
 
+    Each cycle is one driver round over the composed mapping (original
+    vertex → current community): contract the level's graph by its
+    move result (persisted WITH stats, see detect_communities_louvain),
+    move on it, compose; the distinct count is the action that also
+    materializes the new mapping. Move results are freed on return,
+    each contracted level once the next one is materialized."""
     memb = louvain_move(
         edges, gamma, rounds, vertices, weight_col, n_edges_hint=n_edges_hint
     )
-    mapping = memb
-    cur_edges, cur_w, level_memb = edges, weight_col, memb
-    # The convergence scalars and the level-composition checkpoint are
-    # INDEPENDENT consumers of the same frames — overlap them from a
-    # 2-thread pool so their jobs back-fill each other's stage tails
-    # instead of serializing on the driver (guide §2.6; the same
-    # pattern as the r13 louvain/pq pools). Each count is a pure
-    # aggregate, so every label and every break decision is unchanged.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        # prev_n isn't consulted until the first cycle's break check —
-        # let it run while the first contraction materializes.
-        f_prev_n = pool.submit(
-            lambda: mapping.select("community").distinct().count()
+    moves = [memb]
+    level_edges, level_w = edges, weight_col
+
+    def cycle(mapping: DataFrame, _: int) -> DataFrame:
+        nonlocal level_edges, level_w
+        g = _contract_weighted(level_edges, moves[-1], level_w).persist()
+        # the count doubles as the move's edge-sizing hint, skipping its
+        # per-call sizing job
+        gn = g.count()
+        if level_edges is not edges:
+            level_edges.unpersist()
+        level_edges, level_w = g, "weight"
+        moves.append(louvain_move(g, gamma, rounds, weight_col="weight", n_edges_hint=gn))
+        return (
+            mapping.withColumnRenamed("community", "_lvl")
+            .join(
+                moves[-1].select(
+                    F.col("id").alias("_lvl"), F.col("community").alias("community")
+                ),
+                "_lvl",
+            )
+            .select("id", "community")
         )
-        prev_n = None
-        for _ in range(max_cycles - 1):
-            g = _contract_weighted(cur_edges, level_memb, cur_w).persist()
-            # materialize WITH stats (see detect_communities_louvain);
-            # the count doubles as the next move's edge-sizing hint,
-            # skipping its per-call sizing job
-            gn = g.count()
-            sup = louvain_move(
-                g, gamma, rounds, weight_col="weight", n_edges_hint=gn
-            )
-            f_n = pool.submit(
-                lambda s=sup: s.select("community").distinct().count()
-            )
-            new_mapping = (
-                mapping.withColumnRenamed("community", "_lvl")
-                .join(
-                    sup.select(
-                        F.col("id").alias("_lvl"),
-                        F.col("community").alias("community"),
-                    ),
-                    "_lvl",
-                )
-                .select("id", "community")
-                .localCheckpoint(eager=True)
-            )
-            n = f_n.result()
-            _free_checkpoint(mapping)  # superseded level composition
-            mapping = new_mapping
-            cur_edges, cur_w, level_memb = g, "weight", sup
-            if prev_n is None:
-                prev_n = f_prev_n.result()
-            if n >= prev_n * (1.0 - min_shrink):
-                break
-            prev_n = n
+
+    counts: list[int] = []
+
+    def stalled(mapping: DataFrame) -> bool:
+        counts.append(mapping.select("community").distinct().count())
+        return len(counts) > 1 and counts[-1] >= counts[-2] * (1.0 - min_shrink)
+
+    mapping = _iterate(memb, cycle, max_cycles - 1, stalled, operands=moves)[0]
+    if level_edges is not edges:
+        level_edges.unpersist()
     return mapping
 
 
@@ -938,6 +932,7 @@ def detect_communities_louvain(
     )
     g2 = _contract_weighted(g1, l1_super, weight_col="weight").persist()
     g2n = g2.count()
+    g1.unpersist()  # each level's mapping is a materialized checkpoint
     l2_super = louvain_multilevel(
         g2,
         gamma=resolutions[2],
@@ -946,6 +941,7 @@ def detect_communities_louvain(
         weight_col="weight",
         n_edges_hint=g2n,
     )
+    g2.unpersist()
     return (
         l1.alias("a")
         .join(
@@ -1032,9 +1028,9 @@ def pagerank(
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)  # materialized by the count
     )
-    n = verts.count()
+    n = _rows(verts)
     # Weighted walks: each out-edge carries rank·w/Σw instead of
     # rank/out_degree — weight w is exactly equivalent to w parallel
     # unit edges (invariant pinned in pytest). deg below is Σw per
@@ -1053,11 +1049,11 @@ def pagerank(
         .join(deg, "src")
         .select("src", "dst", "deg", "_w")
         .repartition("src")
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)  # materialized by the first superstep
     )
-    ranks = verts.withColumn("rank", F.lit(1.0 / n))
     base = (1.0 - damping) / n
-    for _ in range(iters):
+
+    def superstep(ranks: DataFrame, _: int) -> DataFrame:
         dangling = (
             ranks.join(deg, ranks.id == deg.src, "left_anti")
             .agg(F.sum("rank"))
@@ -1070,61 +1066,47 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("received"))
         )
-        new_ranks = (
-            verts.join(received, verts.id == received.dst, "left")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (F.coalesce("received", F.lit(0.0)) + F.lit(dangling / n))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+        return verts.join(received, verts.id == received.dst, "left").select(
+            "id",
+            (
+                F.lit(base)
+                + F.lit(damping)
+                * (F.coalesce("received", F.lit(0.0)) + F.lit(dangling / n))
+            ).alias("rank"),
         )
-        _free_checkpoint(ranks)  # no-op on the derived initial frame
-        ranks = new_ranks
-    return ranks
+
+    ranks = verts.withColumn("rank", F.lit(1.0 / n))
+    return _iterate(ranks, superstep, iters, operands=[verts, out_edges])[0]
 
 
 def bfs_distances(
     edges: DataFrame, sources: DataFrame, max_depth: int = 6
 ) -> DataFrame:
     """Unweighted shortest-path distances from a source set → (id,
-    dist), reachable-within-max_depth only. Frontier BFS: each round
-    joins the frontier to the edge table and anti-joins the visited
-    set — rows carried per round = |frontier|, not |V|.
+    dist), reachable-within-max_depth only. Frontier BFS: the state is
+    the visited set, the frontier its rows at the last depth; each
+    round joins the frontier to the edge table and anti-joins the
+    visited set. The visited set only grows, so a round that adds no
+    row ends the search.
 
     GraphFrames.shortestPaths analog; bounded depth makes the result
     SQL-expressible (recursive CTE with the same bound), so unlike
     most iterative ops this one gets a full value-hash oracle."""
-    visited = sources.select(F.col("id")).distinct().withColumn("dist", F.lit(0))
-    visited = visited.localCheckpoint(eager=True)
-    frontier = visited
-    e = edges.select("src", "dst").distinct().repartition("src").localCheckpoint(eager=True)
-    for depth in range(1, max_depth + 1):
+    e = edges.select("src", "dst").distinct().repartition("src").localCheckpoint(eager=False)
+
+    def expand(visited: DataFrame, depth: int) -> DataFrame:
+        frontier = visited.filter(F.col("dist") == depth)
         nxt = (
             e.join(frontier, e.src == frontier.id)
             .select(F.col("dst").alias("id"))
             .distinct()
             .join(visited.select("id"), "id", "left_anti")
-            .withColumn("dist", F.lit(depth))
-            .localCheckpoint(eager=True)
+            .withColumn("dist", F.lit(depth + 1))
         )
-        if nxt.isEmpty():
-            _free_checkpoint(nxt)
-            break
-        new_visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        _free_checkpoint(visited)  # superseded (and growing) round
-        if frontier is not visited:
-            # The per-depth frontier checkpoints are superseded too —
-            # without this, one frontier-sized checkpoint per level
-            # accumulates (round 1's frontier IS `visited`, already
-            # freed above, hence the identity guard).
-            _free_checkpoint(frontier)
-        visited = new_visited
-        frontier = nxt
-    return visited
+        return visited.unionByName(nxt)
+
+    visited = sources.select(F.col("id")).distinct().withColumn("dist", F.lit(0))
+    return _iterate(visited, expand, max_depth, _same_count([]), operands=[e])[0]
 
 
 def triangle_count(edges: DataFrame, max_forward_degree: int | None = None) -> DataFrame:
@@ -1360,7 +1342,7 @@ def personalized_pagerank(
         .unionByName(edges.select(F.col("dst").alias("id")))
         .unionByName(src_verts.select(F.col("id").cast(edges.schema["src"].dataType)))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)  # materialized by the first superstep
     )
     teleport = F.when(F.col("id").isin(source_ids), F.lit(1.0 / s)).otherwise(
         F.lit(0.0)
@@ -1370,10 +1352,10 @@ def personalized_pagerank(
         edges.join(deg, "src")
         .select("src", "dst", "deg")
         .repartition("src")
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)  # materialized by the first superstep
     )
-    ranks = verts.withColumn("rank", teleport)
-    for _ in range(iters):
+
+    def superstep(ranks: DataFrame, _: int) -> DataFrame:
         dangling = (
             ranks.join(deg, ranks.id == deg.src, "left_anti")
             .agg(F.sum("rank"))
@@ -1386,19 +1368,17 @@ def personalized_pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("received"))
         )
-        ranks = (
-            verts.join(received, verts.id == received.dst, "left")
-            .select(
-                "id",
-                (
-                    (1.0 - damping) * teleport
-                    + F.lit(damping)
-                    * (F.coalesce("received", F.lit(0.0)) + F.lit(dangling) * teleport)
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+        return verts.join(received, verts.id == received.dst, "left").select(
+            "id",
+            (
+                (1.0 - damping) * teleport
+                + F.lit(damping)
+                * (F.coalesce("received", F.lit(0.0)) + F.lit(dangling) * teleport)
+            ).alias("rank"),
         )
-    return ranks
+
+    ranks = verts.withColumn("rank", teleport)
+    return _iterate(ranks, superstep, iters, operands=[verts, out_edges])[0]
 
 
 def kcore(edges: DataFrame, k: int, max_iter: int | None = None) -> DataFrame:
@@ -1434,31 +1414,24 @@ def kcore(edges: DataFrame, k: int, max_iter: int | None = None) -> DataFrame:
     sym = canon.select(F.col("lo").alias("src"), F.col("hi").alias("dst")).unionByName(
         canon.select(F.col("hi").alias("src"), F.col("lo").alias("dst"))
     )
-    alive = sym.localCheckpoint(eager=True)
-    n_edges = alive.count()
-    rounds = 0
-    while True:
+
+    def peel(alive: DataFrame, _: int) -> DataFrame:
         deg = alive.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
         keep = deg.filter(F.col("_deg") >= k).select("src")
-        nxt = (
+        return (
             alive.join(keep, "src")
             .join(keep.select(F.col("src").alias("dst")), "dst")
             .select("src", "dst")
-            .localCheckpoint(eager=True)
         )
-        n_next = nxt.count()
-        _free_checkpoint(alive)  # superseded peel round
-        alive = nxt
-        if n_next == n_edges:  # fixpoint: nobody fell below k
-            break
-        n_edges = n_next
-        rounds += 1
-        if max_iter is not None and rounds >= max_iter:
-            raise RuntimeError(
-                f"kcore did not reach a fixpoint within max_iter={max_iter} "
-                f"peel rounds ({n_edges} directed edges still shrinking); "
-                "pass max_iter=None to peel to the guaranteed fixpoint"
-            )
+
+    counts: list[int] = []
+    alive, converged = _iterate(sym, peel, max_iter, _same_count(counts))
+    if not converged:
+        raise RuntimeError(
+            f"kcore did not reach a fixpoint within max_iter={max_iter} "
+            f"peel rounds ({counts[-1]} directed edges still shrinking); "
+            "pass max_iter=None to peel to the guaranteed fixpoint"
+        )
     return alive.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("core_degree")
     )

@@ -697,3 +697,145 @@ def test_two_hop_mid_wedge_guardrail(spark):
     assert capped == {t for t in exact if t[1] == 101}
     uncapped = {(r.a, r.b, r.c) for r in ga.two_hop(df, max_mid_wedges=25).collect()}
     assert uncapped == exact
+
+
+# --- the iteration driver (algorithms._iterate) -----------------------------
+
+# 3x4 grid (right and down edges) plus a pendant vertex: LPA relabels it
+# in every one of the first ten rounds, k=2 peels the pendant, and every
+# loop below runs several rounds on it.
+_GRID = (
+    [(f"g{r}{c}", f"g{r}{c + 1}") for r in range(3) for c in range(3)]
+    + [(f"g{r}{c}", f"g{r + 1}{c}") for r in range(2) for c in range(4)]
+    + [("g23", "tail")]
+)
+
+# loop -> (persisted RDDs its result may keep alive, call on (edges, vertices))
+_LOOPS = {
+    "transitive_closure": (1, lambda e, v: ga.transitive_closure(e)),
+    "connected_components": (1, lambda e, v: ga.connected_components(e)),
+    "label_propagation": (1, lambda e, v: ga.label_propagation(e, vertices=v, max_iter=6)),
+    "louvain_move": (1, lambda e, v: ga.louvain_move(e, rounds=6, vertices=v)),
+    "louvain_multilevel": (
+        1, lambda e, v: ga.louvain_multilevel(
+            e, gamma=0.3, rounds=2, max_cycles=3, vertices=v
+        )
+    ),
+    "pagerank": (1, lambda e, v: ga.pagerank(e, iters=6)),
+    "personalized_pagerank": (1, lambda e, v: ga.personalized_pagerank(e, ["g00"], iters=6)),
+    "kcore": (1, lambda e, v: ga.kcore(e, k=2)),
+    "bfs_distances": (
+        1, lambda e, v: ga.bfs_distances(e, v.filter(F.col("id") == "g00"), max_depth=6)
+    ),
+    # one loop result per ladder level
+    "detect_communities": (3, lambda e, v: ga.detect_communities(v, e)),
+    "detect_communities_louvain": (
+        3, lambda e, v: ga.detect_communities_louvain(v, e, rounds_per_level=(2, 2, 2))
+    ),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(_LOOPS))
+def test_loop_leaves_only_its_result_persisted(spark, loop):
+    """Superseded rounds, edge copies and contracted levels are all
+    released: after the result is collected, the only persisted RDDs
+    the call added are the ones behind its result. A set difference,
+    so context-cleaner GC of older RDDs cannot disturb it."""
+    bound, run = _LOOPS[loop]
+    edges = spark.createDataFrame(_GRID, "src string, dst string")
+    vertices = spark.createDataFrame(
+        sorted({(v,) for pair in _GRID for v in pair}), "id string"
+    )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
+    assert run(edges, vertices).collect()
+    added = set(persisted().keySet()) - before
+    assert len(added) <= bound, (loop, sorted(added))
+
+
+def test_fixed_round_loops_keep_values_across_windows(spark):
+    """A fixed-round loop longer than two materialization windows keeps
+    its values: label_propagation(max_iter=9) equals the unrolled DuckDB
+    replay of the registered oracle, and louvain_move(rounds=9) is
+    reproducible."""
+    import duckdb
+
+    from graphragdatapipeline_spark.registry import REGISTRY  # noqa: F401 — registry first
+    from graphragdatapipeline_spark.registries.graph_queries import _lpa_sql
+
+    assert 9 > 2 * ga._FUSE_ROUNDS
+    edges = spark.createDataFrame(_GRID, "src string, dst string")
+    got = {(r.id, r.community) for r in ga.label_propagation(edges, max_iter=9).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE edges (src VARCHAR, dst VARCHAR)")
+    con.executemany("INSERT INTO edges VALUES (?, ?)", _GRID)
+    parts: list[str] = []
+    final = _lpa_sql(parts, "x", "edges", 9, 42)
+    want = set(con.sql(f"WITH {', '.join(parts)} SELECT id, community FROM {final}").fetchall())
+    assert got == want
+
+    m1 = {r.id: r.community for r in ga.louvain_move(edges, rounds=9).collect()}
+    m2 = {r.id: r.community for r in ga.louvain_move(edges, rounds=9).collect()}
+    assert m1 == m2
+
+
+class _Task:
+    def __init__(self, fn):
+        self._fn, self._done, self._value = fn, False, None
+
+    def result(self, timeout=None):
+        if not self._done:
+            self._value, self._done = self._fn(), True
+        return self._value
+
+
+class _DeferredExecutor:
+    """ThreadPoolExecutor stand-in that runs a task only at .result()."""
+
+    def __init__(self, *args, **kwargs):
+        pass
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        return False
+
+    def submit(self, fn, *args, **kwargs):
+        return _Task(lambda: fn(*args, **kwargs))
+
+
+class _EagerExecutor(_DeferredExecutor):
+    """ThreadPoolExecutor stand-in that runs a task at submit()."""
+
+    def submit(self, fn, *args, **kwargs):
+        task = super().submit(fn, *args, **kwargs)
+        task.result()
+        return task
+
+
+def test_louvain_multilevel_independent_of_task_timing(spark, monkeypatch):
+    """louvain_multilevel's communities must not depend on when a pooled
+    task runs. A ring of eight triangles at γ=0.3 needs a second
+    move-and-contract cycle; a convergence count that read the level
+    mapping late would see the first cycle's own count and stop there
+    (7 communities instead of 6)."""
+    import concurrent.futures
+
+    rows = []
+    for c in range(8):
+        tri = [f"c{c}v{i}" for i in range(3)]
+        rows += [(u, v) for i, u in enumerate(tri) for v in tri[i + 1:]]
+        rows.append((f"c{c}v0", f"c{(c + 1) % 8}v1"))
+    edges = spark.createDataFrame(rows, "src string, dst string")
+    runs = {}
+    for name, executor in (("eager", _EagerExecutor), ("deferred", _DeferredExecutor)):
+        monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", executor)
+        runs[name] = {
+            r.id: r.community
+            for r in ga.louvain_multilevel(
+                edges, gamma=0.3, rounds=2, max_cycles=3
+            ).collect()
+        }
+    assert runs["deferred"] == runs["eager"]
+    assert len(set(runs["eager"].values())) == 6
